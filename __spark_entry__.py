@@ -1382,8 +1382,8 @@ def q_kg_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end relational face of the KG-construction pipeline
     (plans/kg.py) over the SF tables, DuckDB-oracle-checked as ONE
     chain: span-structured dictionary mention detection
-    (operators/mentions.py detect_mentions — first-token gate +
-    n-gram broadcast join), mention-count scoring, hierarchy-consistent
+    (operators/mentions.py detect_mentions — one broadcast join keyed
+    on the alias's first token), mention-count scoring, hierarchy-consistent
     binarization (binarize_relational; reference cello/cello.py:736-797),
     most-specific selection with the fixed (prob desc, label asc)
     tie-break (:800-919), ancestor-filled typing triples (:875-891),
@@ -1647,7 +1647,7 @@ def q_media_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     for every alias-dictionary mention in the span's caption — the
     interleaved-payload face of the KG triple emission, reusing the
     q_kg_chain alias dictionary so the caption mention path runs the
-    same detect_mentions gate as the main pipeline."""
+    same detect_mentions plan as the main pipeline."""
     from cello_spark.operators.multimodal import media_triples
 
     docs = _t(spark, sf_dir, "documents")

@@ -210,3 +210,29 @@ def label_edge_index(
         if c in pos and p in pos
     ]
     return np.asarray(rows, dtype=np.int64).reshape(-1, 2)
+
+
+# Reconciled scores closer than this are one tie. The projection pools
+# constrained labels to a single value in exact arithmetic, and the
+# float result then differs by a few ulps with the batch's shape (the
+# BLAS path of X Wᵀ depends on the row count), so an exact argmax would
+# let a document's batch neighbours pick its label. 1e-9 is ~10⁷ ulps
+# above that noise and far below the float32 resolution (~6e-8) the
+# scores are emitted at.
+TIE_ATOL = 1e-9
+
+
+def select_top_lowest_index(scores: np.ndarray, mask: np.ndarray) -> np.ndarray:
+    """Per row, the lowest column index among masked entries within
+    TIE_ATOL of the row's masked maximum — with columns in sorted label
+    order, the (score desc, label asc) tie-break made tolerant of
+    rounding. -1 for rows with no masked entry. The one selection rule
+    of the engine (LinkingModel.select_most_specific) and the oracle
+    (oracle.select_one_most_specific)."""
+    out = np.full(scores.shape[0], -1, dtype=np.int64)
+    rows = mask.any(axis=1)
+    if rows.any():
+        s, m = scores[rows], mask[rows]
+        top = np.where(m, s, -np.inf).max(axis=1, keepdims=True)
+        out[rows] = np.argmax(m & (s >= top - TIE_ATOL), axis=1)
+    return out

@@ -15,9 +15,10 @@ shuffles. Each Arrow batch does pure-numpy matrix work:
      min (closed form of cello/cello.py:736-797's descendant zeroing).
   4. most-specific selection         — per-row most-specific positive
      labels (graph.py:105-135 semantics via precomputed strict-ancestor
-     masks), qualifier exclusion + re-add, argmax prob with the fixed
-     tie-break (prob desc, label asc) replacing the reference's
-     set-iteration-order max (cello/cello.py:865-873).
+     masks), qualifier exclusion + re-add, max prob with the fixed
+     tie-break (prob desc, label asc; probs within TIE_ATOL tie)
+     replacing the reference's set-iteration-order max
+     (cello/cello.py:865-873).
 
 Output: (doc_id, probs, bins, most_specific, final_labels) where
 final_labels = selected label + its label-graph ancestors (+ positive
@@ -43,6 +44,7 @@ from cello_spark.functions.hierarchy import (
     dykstra_matrix,
     label_edge_index,
     score_matrix,
+    select_top_lowest_index,
 )
 
 
@@ -193,15 +195,12 @@ class LinkingModel:
         # dominated[s, j] = ∃ b: cand[s, b] and j strict ancestor of b
         dominated = cand @ self.anc_strict  # bool matmul → int
         ms_mask = cand & ~(dominated > 0)
-        n_rows, n = R.shape
-        ms_idx = np.full(n_rows, -1, dtype=np.int64)
-        final = np.zeros((n_rows, n), dtype=np.int32)
-        any_ms = ms_mask.any(axis=1)
+        # max prob among candidates; near-equal maxima (TIE_ATOL) go
+        # to the lowest index == label asc (labels are sorted)
+        ms_idx = select_top_lowest_index(R, ms_mask)
+        final = np.zeros(R.shape, dtype=np.int32)
+        any_ms = ms_idx >= 0
         if any_ms.any():
-            # argmax prob among candidates; tie-break label asc ==
-            # lowest index among equal maxima (labels are sorted)
-            masked = np.where(ms_mask, R, -np.inf)
-            ms_idx[any_ms] = np.argmax(masked[any_ms], axis=1)
             rows = np.nonzero(any_ms)[0]
             final[rows] = self.anc_with_self[ms_idx[any_ms]].astype(np.int32)
             # re-add positive qualifier labels + their ancestors

@@ -10,18 +10,14 @@ Scale design (100 TB documents, KB-size dictionary):
 - `explode(spans)` keeps only text spans; documents themselves are
   never mutated → the per-row span-sequence invariant is preserved by
   construction (mentions are a *separate* table keyed by doc_id).
-- Candidate generation is pure JVM and lambda-free (posexplode →
-  explode(sequence) → top-level slice/array_join, one whole-stage
-  codegen span) — no Python and no interpreted higher-order
-  functions in the hot path (the HOF form anti-scales; see
-  candidate_ngrams docstring).
-- The dictionary join is an explicit `F.broadcast` hash join: zero
-  shuffle on the document side regardless of input size. Probing on
-  xxhash64 over the window columns instead of the concat'd n-gram
-  string (alias side pre-hashed, exact string verify post-join) was
-  measured and REJECTED (tools/diag_match_hash.py, 4M docs: CPU within
-  noise at both local[8] and local[32]) — candidate construction, not
-  the probe key, is where the stage's cycles go.
+- The token window is pure JVM and lambda-free (posexplode over
+  arrays_zip of shifted slices, one whole-stage codegen span) — no
+  Python and no interpreted higher-order functions in the hot path
+  (the HOF form anti-scales; see `_token_window`).
+- Matching is ONE broadcast hash join per token position, keyed on the
+  alias's first token; the alias's remaining tokens are compared in
+  the join condition. The document side never shuffles, and no n-gram
+  string is built for any position, hit or miss.
 - The only shuffle in this stage is the optional per-term aggregate,
   which uses two-level salting because hub terms (the root 'cell'
   alias) receive a large share of all mentions (SURVEY §2.3 skew note).
@@ -34,11 +30,6 @@ from pyspark.sql import DataFrame, functions as F
 from cello_spark.functions.text import mention_tokens as _mention_tokens
 
 MAX_ALIAS_TOKENS = 6
-
-# above this many distinct alias first-tokens the CASE/IN gate's
-# driver-built literal expression gets unwieldy (plan size, codegen
-# limits); switch to the explode + broadcast-join gate
-MAX_CASE_GATE_TOKENS = 10_000
 
 
 def text_spans(documents: DataFrame) -> DataFrame:
@@ -57,20 +48,19 @@ def text_spans(documents: DataFrame) -> DataFrame:
     )
 
 
-def candidate_ngrams(spans: DataFrame, max_n: int = MAX_ALIAS_TOKENS) -> DataFrame:
-    """All 1..max_n token n-grams of each text span, normalized with
-    the mention tokenizer (punctuation folded). Output
-    (doc_id, span_idx, offset, ngram).
+def _token_window(spans: DataFrame, max_n: int) -> DataFrame:
+    """One row per token position of each text span, tokenized with
+    `mention_tokens` (punctuation folded): (doc_id, span_idx, offset,
+    n_toks, pos, t0..t{max_n-1}) where t0 is the token at `pos` and
+    t1.. the next max_n-1 tokens, null past the span's end.
 
-    Shape note (measured, tools/diag_ngram_variants.py): nested
-    higher-order functions evaluate INTERPRETED per element and
-    anti-scale on a shared heap, and retaining the whole `tokens`
-    array through an explode makes Tungsten Generate copy O(span_len)
-    bytes into EVERY output row — quadratic in span length. This uses
-    the same O(max_n)-carry shape as detect_mentions: posexplode over
-    arrays_zip of shifted slices ships each position's next max_n-1
-    tokens alongside it, and the n-gram is a top-level concat_ws —
-    one WholeStageCodegen span, no lambda, no quadratic copy."""
+    Shape note (measured, BENCH/BASELINE.md): nested higher-order
+    functions evaluate INTERPRETED per element and anti-scale on a
+    shared heap, and retaining the whole `tokens` array through an
+    explode makes Tungsten Generate copy O(span_len) bytes into EVERY
+    output row — quadratic in span length. posexplode over arrays_zip
+    of shifted slices ships only each position's O(max_n) window — one
+    WholeStageCodegen span, no lambda, no quadratic copy."""
     toks = spans.select(
         "doc_id",
         "span_idx",
@@ -80,8 +70,7 @@ def candidate_ngrams(spans: DataFrame, max_n: int = MAX_ALIAS_TOKENS) -> DataFra
     zip_expr = "arrays_zip(tokens" + "".join(
         f", slice(tokens, {k + 1}, size(tokens))" for k in range(1, max_n)
     ) + ")"
-    window_cols = [f"t{k}" for k in range(max_n)]
-    tokpos = toks.select(
+    return toks.select(
         "doc_id",
         "span_idx",
         "offset",
@@ -96,12 +85,20 @@ def candidate_ngrams(spans: DataFrame, max_n: int = MAX_ALIAS_TOKENS) -> DataFra
         F.col("w")["tokens"].alias("t0"),
         *[F.col("w")[str(k)].alias(f"t{k}") for k in range(1, max_n)],
     )
+
+
+def candidate_ngrams(spans: DataFrame, max_n: int = MAX_ALIAS_TOKENS) -> DataFrame:
+    """All 1..max_n token n-grams of each text span, normalized with
+    the mention tokenizer (punctuation folded). Output
+    (doc_id, span_idx, offset, ngram). Built on the same token window
+    as `detect_mentions`; the n-gram is a top-level concat_ws."""
+    window_cols = [f"t{k}" for k in range(max_n)]
     ngram_case = "CASE n " + " ".join(
         f"WHEN {k} THEN "
         + ("t0" if k == 1 else f"concat_ws(' ', {', '.join(window_cols[:k])})")
         for k in range(1, max_n + 1)
     ) + " END"
-    return tokpos.select(
+    return _token_window(spans, max_n).select(
         "doc_id",
         "span_idx",
         "offset",
@@ -122,284 +119,52 @@ def detect_mentions(
     alias_dict: DataFrame,  # (alias_norm, term_id) — small, broadcast
     max_n: int | None = None,
     distinct: bool = True,
-    gate: str = "auto",  # "auto" | "case" | "join"
-    probe: str = "hash",  # "hash" | "string"
-    dict_collect_threshold: int = 1_000_000,
 ) -> DataFrame:
     """Dictionary mention detection. Returns
     (doc_id, span_idx, offset, alias_norm, term_id), distinct per
-    (doc span, term). Text is tokenized with `mention_tokens`
-    (punctuation folded, matching the dictionary-side
-    `normalize_alias`), so aliases adjacent to punctuation match. Two
-    broadcast hash joins — the document side never shuffles:
+    (doc span, term) unless `distinct=False`. Text is tokenized with
+    `mention_tokens` (punctuation folded, matching the dictionary-side
+    `normalize_alias`), so aliases adjacent to punctuation match.
+    Aliases longer than `max_n` tokens (default: the longest alias)
+    never match.
 
-      1. FIRST-TOKEN GATE: only token positions whose token can start
-         an alias build n-grams — this prunes the candidate space by
-         the fraction of corpus tokens that can start an alias (the
-         dominant cost at scale is candidate construction, so the
-         gate is worth ~an order of magnitude on real text). Two
-         equivalent implementations, chosen by `gate`:
-           "case" — a driver-built CASE/IN literal over the distinct
-             first tokens (Catalyst compiles IN lists to hash-set
-             InSet probes; zero extra operators). Best for ontology
-             dictionaries (10³-10⁴ first tokens).
-           "join" — posexplode tokens, broadcast-join a (first_token,
-             lengths) table. No driver-side literal, so it scales to
-             arbitrarily large dictionaries (10⁵+ aliases, e.g.
-             EFO+DOID+CL+UBERON merged); costs one explode.
-           "auto" — "case" below MAX_CASE_GATE_TOKENS, else "join".
-      2. candidates at surviving positions, built only for the EXACT
-         lengths of aliases starting with that token (not 1..max),
-         probed against the alias dictionary. `probe` picks the key:
-           "hash" (default) — xxhash64 directly over the window's
-             token columns (one CASE arm per candidate length), joined
-             against the identically-hashed alias side, with an exact
-             string verify ONLY on hash hits. Gated-but-non-matching
-             positions (the majority on real text) never allocate an
-             n-gram string at all — this cuts the stage's dominant
-             allocator (candidate UTF8String construction, measured
-             via the (8,32) scaling probes) without changing results:
-             the post-join verify makes hash collisions harmless.
-           "string" — concat_ws the n-gram per candidate and join on
-             it (the reference formulation; kept for A/B measurement
-             and as the oracle-shaped plan).
+    One plan: every token position of the window probes a broadcast
+    alias table (alias_norm, term_id, al, a0..a{max_n-1}) — al the
+    alias's token count, a_k its k-th token — on t0 = a0, and the join
+    condition checks the rest of the alias:
 
-    For dictionaries larger than `dict_collect_threshold` rows, no
-    COLLECT touches the driver: max_n and the first-token gate table
-    are computed with small Spark aggregations (gate is forced to
-    "join"; "case" would need driver-side literals), and the
-    dictionary-side joins drop the broadcast hint — a broadcast would
-    itself collect the dictionary to the driver and ship it to every
-    executor (driver memory + the 8 GB broadcast limit), so past the
-    threshold the probe joins are left to AQE, which broadcasts iff
-    the built side is actually small and otherwise runs a shuffled
-    hash join. Below the threshold the dictionary is collected once —
-    dict-sized data, and the CASE/IN gate needs the literals anyway.
+        al <= n_toks - pos AND (al <= k OR t_k = a_k)  for k >= 1
+
+    The length bound also keeps every compared t_k non-null (nulls
+    only pad past the span's end). Positions whose token starts no
+    alias drop at the hash probe; no n-gram string is ever built.
+    Finding `max_n` is the only dictionary job (one aggregate); the
+    dictionary is never collected to the driver except by the
+    broadcast itself.
     """
-    spark = documents.sparkSession
-    # empty-dictionary returns must carry the SAME schema the populated
-    # path produces (doc_id/term_id types come from the inputs), or a
-    # caller unioning per-batch results hits an AnalysisException the
-    # first time one batch has no aliases
-    empty_schema = (
-        f"doc_id {documents.schema['doc_id'].dataType.simpleString()}, "
-        "span_idx int, offset int, alias_norm string, "
-        f"term_id {alias_dict.schema['term_id'].dataType.simpleString()}"
+    parts = F.split("alias_norm", " ")
+    if max_n is None:
+        # an empty dictionary aggregates to null: a 1-token window
+        # then runs the same plan and matches nothing, so the empty
+        # result has exactly the populated result's schema
+        max_n = alias_dict.agg(F.max(F.size(parts))).first()[0] or 1
+    aliases = alias_dict.select(
+        "alias_norm",
+        "term_id",
+        F.size(parts).alias("al"),
+        # F.get (not the [] subscript): null past the alias's end
+        # under ANSI mode
+        *[F.get(parts, k).alias(f"a{k}") for k in range(max_n)],
+    ).where(F.col("al") <= max_n)
+    match = " AND ".join(
+        ["t0 = a0", "al <= n_toks - pos"]
+        + [f"(al <= {k} OR t{k} = a{k})" for k in range(1, max_n)]
     )
-    if probe not in ("hash", "string"):
-        raise ValueError(f"unknown probe {probe!r}")
-    n_aliases = alias_dict.count()
-    if n_aliases == 0:
-        return spark.createDataFrame([], empty_schema)
-    ft_lengths: dict[str, set[int]] = {}
-    gate_df = None
-    if n_aliases > dict_collect_threshold:
-        if gate == "case":
-            raise ValueError(
-                f"gate='case' needs driver-side literals; dictionary has "
-                f"{n_aliases} rows (> {dict_collect_threshold}) — use "
-                "gate='join' or 'auto'"
-            )
-        gate = "join"
-        parts = alias_dict.select(F.split("alias_norm", " ").alias("p"))
-        if max_n is None:
-            max_n = parts.agg(F.max(F.size("p"))).first()[0]
-        gate_df = (
-            parts.select(F.col("p")[0].alias("tok"), F.size("p").alias("l"))
-            .filter(F.col("l") <= max_n)
-            .groupBy("tok")
-            .agg(F.sort_array(F.collect_set("l")).alias("ns"))
-        )
-    else:
-        aliases = alias_dict.select("alias_norm", "term_id").collect()
-        if max_n is None:
-            max_n = max(len(a.alias_norm.split(" ")) for a in aliases)
-        # per-first-token EXACT alias length set: positions only build
-        # candidates whose length some alias starting with that token
-        # actually has. A token that starts only {2,3}-word aliases
-        # never builds the 1-gram — sequence(1, max_len) would.
-        # Candidate construction is the stage's dominant allocator, so
-        # the exact set cuts both CPU and the allocation pressure that
-        # anti-scales on a shared heap (~1.5x fewer candidate lengths
-        # on the fixture dictionary, more on real ontologies whose
-        # long aliases are rare).
-        for a in aliases:
-            parts_ = a.alias_norm.split(" ")
-            if len(parts_) <= max_n:
-                ft_lengths.setdefault(parts_[0], set()).add(len(parts_))
-        if not ft_lengths:
-            return spark.createDataFrame([], empty_schema)
-        if gate == "auto":
-            gate = "case" if len(ft_lengths) <= MAX_CASE_GATE_TOKENS else "join"
-
-    # dictionary-side join strategy: explicit broadcast only while the
-    # dictionary is known driver/executor-memory safe; past the
-    # threshold AQE picks (shuffled hash join unless it measures the
-    # built side small)
-    if n_aliases > dict_collect_threshold:
-        def _dict_side(d):
-            return d
-    else:
-        def _dict_side(d):
-            return F.broadcast(d)
-
-    toks = text_spans(documents).select(
-        "doc_id",
-        "span_idx",
-        "offset",
-        _mention_tokens("text").alias("tokens"),
+    out = (
+        _token_window(text_spans(documents), max_n)
+        .join(F.broadcast(aliases), F.expr(match))
+        .select("doc_id", "span_idx", "offset", "alias_norm", "term_id")
     )
-    # Candidate construction is shared by both gates and deliberately
-    # lambda-free: posexplode positions, gate them, explode the exact
-    # length set, then concat at the TOP level of the projection.
-    # Nested higher-order functions (the obvious "transform tokens,
-    # build per-position arrays" form) evaluate INTERPRETED per
-    # element; their per-position Scala-collection allocation
-    # anti-scales with task parallelism on a shared heap (measured
-    # ~2.8x core-second inflation local[8]→local[32],
-    # tools/diag_ngram_variants.py). This shape keeps the whole
-    # stage — explode → gate → explode → join — in one
-    # WholeStageCodegen span with the document side never shuffled.
-    #
-    # The explode ships each position's NEXT max_n-1 tokens alongside
-    # it (arrays_zip of shifted slices, null-padded) instead of
-    # retaining the whole `tokens` array: Tungsten Generate copies
-    # retained columns into every output row, so carrying `tokens`
-    # through two explodes costs O(span_len) bytes PER TOKEN —
-    # quadratic in span length and the stage's dominant allocation —
-    # where the zipped window is O(max_n) per row. n-grams are then a
-    # plain concat_ws over the windowed tokens, no slice/array_join.
-    zip_expr = "arrays_zip(tokens" + "".join(
-        f", slice(tokens, {k + 1}, size(tokens))" for k in range(1, max_n)
-    ) + ")"
-    tokpos = toks.select(
-        "doc_id",
-        "span_idx",
-        "offset",
-        F.size("tokens").alias("n_toks"),
-        F.posexplode(F.expr(zip_expr)).alias("pos", "w"),
-    ).select(
-        "doc_id",
-        "span_idx",
-        "offset",
-        "n_toks",
-        "pos",
-        F.col("w")["tokens"].alias("tok"),
-        *[F.col("w")[str(k)].alias(f"t{k}") for k in range(1, max_n)],
-    )
-    window_cols = ["tok"] + [f"t{k}" for k in range(1, max_n)]
-    ngram_case = "CASE n " + " ".join(
-        f"WHEN {k} THEN "
-        + ("tok" if k == 1 else f"concat_ws(' ', {', '.join(window_cols[:k])})")
-        for k in range(1, max_n + 1)
-    ) + " END"
-    if gate == "case":
-        # group first tokens by identical length set: a handful of
-        # distinct sets (e.g. {1}, {2,3}, {3,4}) → a short CASE whose
-        # IN lists Catalyst compiles to hash-set InSet probes
-        by_set: dict[tuple[int, ...], list[str]] = {}
-        for t, ls in ft_lengths.items():
-            by_set.setdefault(tuple(sorted(ls)), []).append(t)
-
-        def _in_lit(toks_: list[str]) -> str:
-            return ", ".join(
-                "'" + t.replace("'", "\\'") + "'" for t in sorted(toks_)
-            )
-
-        n_cand = "CASE " + " ".join(
-            f"WHEN tok IN ({_in_lit(ts)}) THEN array({', '.join(map(str, ls))})"
-            for ls, ts in sorted(by_set.items())
-        ) + " ELSE NULL END"
-        gated = tokpos.withColumn("ns", F.expr(n_cand)).where(
-            F.col("ns").isNotNull()
-        )
-    elif gate == "join":
-        if gate_df is None:
-            gate_df = spark.createDataFrame(
-                sorted(
-                    (t, sorted(ls)) for t, ls in ft_lengths.items()
-                ),
-                "tok string, ns array<int>",
-            )
-        # inner broadcast join IS the gate: non-starting positions drop
-        gated = tokpos.join(_dict_side(gate_df), "tok")
-    else:
-        raise ValueError(f"unknown gate {gate!r}")
-    # explode the small exact-length array, then a TOP-LEVEL bound
-    # check — no higher-order function, stays in whole-stage codegen.
-    # The bound check also guarantees every token the selected CASE
-    # branch reads is non-null (nulls only pad past the span's end).
-    cands = gated.select(
-        "doc_id",
-        "span_idx",
-        "offset",
-        "n_toks",
-        "pos",
-        *window_cols,
-        F.explode("ns").alias("n"),
-    ).where(F.expr("n <= n_toks - pos"))
-    if probe == "hash":
-        # hash the window columns directly — per-arity CASE arms keep
-        # the call codegen'd; no candidate string is ever allocated
-        # for positions that miss the dictionary
-        hash_case = "CASE n " + " ".join(
-            f"WHEN {k} THEN xxhash64({', '.join(window_cols[:k])})"
-            for k in range(1, max_n + 1)
-        ) + " END"
-        alias_h = (
-            alias_dict.select(
-                "alias_norm", "term_id", F.split("alias_norm", " ").alias("p")
-            )
-            .withColumn("al", F.size("p"))
-            .filter(F.col("al") <= max_n)
-            .withColumn(
-                "hh",
-                F.expr(
-                    "CASE al " + " ".join(
-                        f"WHEN {k} THEN xxhash64("
-                        + ", ".join(f"p[{i}]" for i in range(k))
-                        + ")"
-                        for k in range(1, max_n + 1)
-                    ) + " END"
-                ),
-            )
-            .select(
-                "hh",
-                "alias_norm",
-                "term_id",
-                "al",
-                # pre-split alias tokens as top-level columns: the
-                # post-join verify compares window tokens against them
-                # directly (UTF8String byte equality) — no n-gram
-                # string is built even for HITS, so the candidate path
-                # allocates nothing per row
-                # F.get (not the [] subscript): null-safe past the
-                # alias's length under ANSI mode
-                *[F.get("p", k).alias(f"a{k}") for k in range(max_n)],
-            )
-        )
-        verify = "n = al AND tok = a0 AND " + " AND ".join(
-            f"(n <= {k} OR t{k} = a{k})" for k in range(1, max_n)
-        ) if max_n > 1 else "n = al AND tok = a0"
-        out = (
-            cands.withColumn("hh", F.expr(hash_case))
-            .join(_dict_side(alias_h), "hh")
-            # exact token-wise verify on hash hits only — collisions
-            # are harmless, and no concat is ever materialized
-            .where(F.expr(verify))
-            .select("doc_id", "span_idx", "offset", "alias_norm", "term_id")
-        )
-    else:
-        strung = cands.select(
-            "doc_id",
-            "span_idx",
-            "offset",
-            F.expr(ngram_case).alias("ngram"),
-        )
-        out = strung.join(
-            _dict_side(alias_dict),
-            strung.ngram == alias_dict.alias_norm,
-        ).select("doc_id", "span_idx", "offset", "alias_norm", "term_id")
     if not distinct:
         # streaming callers and the KG pipeline skip the dedup — a
         # stateful dropDuplicates on an unbounded stream needs a

@@ -15,7 +15,7 @@ Scale design:
   lambda-free (the arrays_zip/posexplode window pattern from the
   mention stage — nested higher-order-function lambdas evaluate
   interpreted per element and anti-scale on a shared heap, measured
-  in tools/diag_ngram_variants.py), `stack` unpivots the per-n grams
+  in BENCH/BASELINE.md), `stack` unpivots the per-n grams
   in the same codegen span, then exactly TWO shuffles: a map-side
   combinable count on (doc, n, gram) and the per-doc conditional
   aggregate. Gram keys are doc-scoped so there is no hub-key skew.

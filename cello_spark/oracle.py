@@ -18,6 +18,7 @@ from cello_spark.functions.hierarchy import (
     dykstra_matrix,
     label_edge_index,
     score_matrix,
+    select_top_lowest_index,
 )
 
 # ---------------------------------------------------------------------------
@@ -232,9 +233,11 @@ def select_one_most_specific(
     most_specific_nodes EXCLUDING qualifier terms (:858-891); pick the
     max-probability member — tie-break fixed to (prob desc, label asc)
     since the reference's Python max over a set is order-dependent
-    (:865-873); final binary = selected + its ancestors, plus positive
-    qualifier terms and their ancestors (:875-891); most_specific=''
-    when no positives (:909-915).
+    (:865-873), with probabilities within TIE_ATOL counted as equal
+    (the engine's rule, `select_top_lowest_index`); final binary =
+    selected + its ancestors, plus positive qualifier terms and their
+    ancestors (:875-891); most_specific='' when no positives
+    (:909-915).
 
     Returns (most_specific_df, final_binary_df)."""
     keep = set(thresholds.label)
@@ -250,7 +253,9 @@ def select_one_most_specific(
         cand = pos - qualifier_terms
         ms_set = most_specific_nodes(label_edges, cand) if cand else set()
         if ms_set:
-            best = sorted(ms_set, key=lambda l: (-probs.loc[doc_id, l], l))[0]
+            row = probs.loc[doc_id, labels].to_numpy(dtype=np.float64)
+            in_set = np.array([[l in ms_set for l in labels]])
+            best = labels[select_top_lowest_index(row[None, :], in_set)[0]]
             final_pos = {best} | (anc_cache[best] & set(labels))
             for q in pos & qualifier_terms:
                 final_pos |= {q} | (anc_cache[q] & set(labels))

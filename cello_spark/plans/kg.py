@@ -50,11 +50,9 @@ TERM_PREFIX = "CS:"
 # instead of pre-gating the wide features through a shuffle — see
 # stage_linked. Measured breakeven is high: the exchange the dense
 # plan saves is cheap relative to the extra scoring below ~0.9.
-# CELLO_GATE_SELECTIVITY overrides (2.0 forces the sparse plan, 0.0
-# forces dense) — a prod knob and the A/B lever for plan benchmarks.
-import os as _os
-
-GATE_SELECTIVITY = float(_os.environ.get("CELLO_GATE_SELECTIVITY", "0.9"))
+# A threshold <= 0 forces the dense plan and > 1 the sparse plan
+# without running the probe.
+GATE_SELECTIVITY = 0.9
 
 
 # ---------------------------------------------------------------------------
@@ -313,8 +311,8 @@ def build_kg_pipeline(
     #
     # The density probe samples a few thousand documents at build time
     # (same stats role as a CBO's ANALYZE sample; limit() keeps it one
-    # sub-second job). A forced threshold (<=0 dense, >1 sparse — the
-    # CELLO_GATE_SELECTIVITY env contract) skips the probe entirely.
+    # sub-second job). A forced threshold (<=0 dense, >1 sparse) skips
+    # the probe entirely.
     #
     # No dropDuplicates on the mention side in either plan — the
     # left_semi hash build dedups natively, and the explicit dedup
@@ -379,7 +377,7 @@ def build_kg_pipeline(
         # partial aggregate collapses them map-side, so only unique
         # doc_ids cross the wire and the hash relation holds one entry
         # per doc (measured at 4M docs: gate 42.9→21.9 core-sec @8,
-        # 65.5→29.5 @32 — tools/diag_triples.py)
+        # 65.5→29.5 @32 — BENCH/BASELINE.md)
         mentioned = (
             ctx["mentions"].select("doc_id").distinct().hint("SHUFFLE_HASH")
         )
@@ -408,9 +406,6 @@ def build_kg_pipeline(
             raw, ctx["canonical_map"], merged_terms, term_prefix=term_prefix
         )
 
-    # CELLO_STAGE_OVERLAP=0 forces sequential stage execution (deps =
-    # all earlier stages) with identical stage bodies — the A/B lever
-    # for the overlap-vs-contention tradeoff on a shared-memory box
     def stage_media_triples(ctx: dict) -> DataFrame:
         from cello_spark.operators.multimodal import media_triples as _mt
 
@@ -420,36 +415,22 @@ def build_kg_pipeline(
             raw, ctx["canonical_map"], merged_terms, term_prefix=term_prefix
         )
 
-    overlap = _os.environ.get("CELLO_STAGE_OVERLAP", "1") != "0"
-    if overlap:
-        triples_deps = ["onto_triples", "linked", "canonical_map"] + (
-            ["mentions"] if dense else []
-        )
-        deps = {
-            "ontology": [],
-            "closure": [],
-            "onto_triples": [],
-            "mentions": [],
-            "linked": [] if dense else ["mentions"],
-            "canonical_map": [],
-            "triples": triples_deps,
-            "media_triples": ["canonical_map"],
-        }
-    else:
-        deps = {}
     (
-        pipe.add_stage("ontology", stage_ontology, tiny=True, deps=deps.get("ontology"))
-        .add_stage("closure", stage_closure, tiny=True, deps=deps.get("closure"))
-        .add_stage("onto_triples", stage_onto_triples, tiny=True, deps=deps.get("onto_triples"))
-        .add_stage("mentions", stage_mentions, deps=deps.get("mentions"))
-        .add_stage("linked", stage_linked, deps=deps.get("linked"))
-        .add_stage("canonical_map", stage_canonical_map, tiny=True, deps=deps.get("canonical_map"))
-        .add_stage("triples", stage_triples, deps=deps.get("triples"))
+        pipe.add_stage("ontology", stage_ontology, tiny=True, deps=[])
+        .add_stage("closure", stage_closure, tiny=True, deps=[])
+        .add_stage("onto_triples", stage_onto_triples, tiny=True, deps=[])
+        .add_stage("mentions", stage_mentions, deps=[])
+        .add_stage("linked", stage_linked, deps=[] if dense else ["mentions"])
+        .add_stage("canonical_map", stage_canonical_map, tiny=True, deps=[])
+        .add_stage(
+            "triples",
+            stage_triples,
+            deps=["onto_triples", "linked", "canonical_map"]
+            + (["mentions"] if dense else []),
+        )
     )
     if include_media_triples:
-        pipe.add_stage(
-            "media_triples", stage_media_triples, deps=deps.get("media_triples")
-        )
+        pipe.add_stage("media_triples", stage_media_triples, deps=["canonical_map"])
     return pipe
 
 
@@ -461,8 +442,7 @@ def estimate_mention_density(
     (a CBO would read the same number from ANALYZE statistics).
     limit() is the cheapest sample (first partitions only); its bias is
     acceptable for a one-bit plan decision with a conservative 0.9
-    threshold, and corpora skewed enough to defeat it can force a plan
-    via CELLO_GATE_SELECTIVITY."""
+    threshold."""
     sample = documents.select("doc_id", "spans").limit(sample_docs)
     n = sample.count()
     if n == 0:

@@ -49,6 +49,34 @@ _BLAS_ENV = {
 }
 
 
+def memory_limit_bytes() -> int:
+    """Physical RAM, or the cgroup memory limit when that is lower."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in (
+        "/sys/fs/cgroup/memory.max",  # cgroup v2
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+    ):
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            return min(ram, int(raw))
+    return ram
+
+
+def default_driver_mem() -> str:
+    """Driver heap sized from the host: 40% of the memory limit, from
+    1g to 24g, in MiB. -Xms=-Xmx is pre-touched at start, so the whole
+    heap is committed; Python workers, the page cache and shuffle
+    files need the rest. 24g covers every workload in this repo
+    (broadcast dims are dict-sized; stage data streams through
+    executors)."""
+    mb = memory_limit_bytes() * 2 // 5 // 2**20
+    return f"{max(1024, min(24 * 1024, mb))}m"
+
+
 def get_spark(
     app_name: str = "cello_spark",
     cores: int | None = None,
@@ -57,7 +85,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``cores`` defaults to $SPARK_GRAFT_CPUS or all local cores. On a
+    ``cores`` defaults to $SPARK_GRAFT_CPUS or all local cores; the
+    driver heap to $SPARK_DRIVER_MEM or `default_driver_mem()`. On a
     real cluster the master/executor settings come from spark-submit
     and the ``local[...]`` master here is simply not used.
     """
@@ -73,10 +102,7 @@ def get_spark(
     for k, v in _BLAS_ENV.items():
         os.environ.setdefault(k, v)
 
-    # 24g covers every workload in this repo (broadcast dims are
-    # dict-sized; stage data streams through executors); a smaller
-    # fixed heap keeps the AlwaysPreTouch startup tax low.
-    driver_mem = os.environ.get("SPARK_DRIVER_MEM", "24g")
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem()
 
     builder = (
         SparkSession.builder.master(f"local[{cores}]")

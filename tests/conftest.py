@@ -10,7 +10,8 @@ from cello_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="cello_spark_tests", cores=8, shuffle_partitions=8)
+    # cores from $SPARK_GRAFT_CPUS (or all local cores), heap from the host
+    s = get_spark(app_name="cello_spark_tests", shuffle_partitions=8)
     yield s
 
 

@@ -39,6 +39,19 @@ def _mini_docs(spark):
     return spark.createDataFrame(rows, DOCS_SCHEMA)
 
 
+def _punctuated_docs(spark):
+    rows = [
+        (
+            "p1",
+            [
+                {"kind": "text", "text": "elevated T cell, and B cell.", "media_ref": "", "offset": 0},
+                {"kind": "text", "text": 'counts: "monocyte"; also T cell!', "media_ref": "", "offset": 30},
+            ],
+        ),
+    ]
+    return spark.createDataFrame(rows, DOCS_SCHEMA)
+
+
 def test_text_spans_keeps_only_text(spark):
     docs = _mini_docs(spark)
     ts = text_spans(docs).collect()
@@ -71,16 +84,7 @@ def test_detect_mentions_punctuated_text(spark, onto):
     folds punctuation (except ()+-, meaningful in aliases) to spaces —
     round-1 ADVICE flagged the regex-free tokenizer's silent recall
     regression on real text."""
-    rows = [
-        (
-            "p1",
-            [
-                {"kind": "text", "text": "elevated T cell, and B cell.", "media_ref": "", "offset": 0},
-                {"kind": "text", "text": 'counts: "monocyte"; also T cell!', "media_ref": "", "offset": 30},
-            ],
-        ),
-    ]
-    docs = spark.createDataFrame(rows, DOCS_SCHEMA)
+    docs = _punctuated_docs(spark)
     terms = spark.createDataFrame(onto.terms)
     m = detect_mentions(docs, alias_dictionary(terms))
     got = {(r.span_idx, r.term_id) for r in m.collect()}
@@ -90,22 +94,84 @@ def test_detect_mentions_punctuated_text(spark, onto):
     assert (1, "CS:0000030") in got  # "T cell!" → t cell
 
 
-def test_gate_join_equals_gate_case(spark, onto, small_world):
-    """The explode+broadcast-join first-token gate (large-dictionary
-    fallback) must produce exactly the CASE/IN gate's mentions."""
-    docs = spark.createDataFrame(small_world["documents"])
+def _reference_mentions(docs, adict, distinct):
+    """Brute-force matcher: tokenize each text span with the same
+    `mention_tokens` fold, then look up EVERY n-gram of 1..max_n tokens
+    (max_n = the longest alias) in the dictionary, in plain Python."""
+    from cello_spark.functions.text import mention_tokens
+
+    pairs = [(r.alias_norm, r.term_id) for r in adict.collect()]
+    by_alias = {}
+    for a, t in pairs:
+        by_alias.setdefault(a, []).append(t)
+    max_n = max(len(a.split(" ")) for a, _ in pairs)
+    spans = text_spans(docs).select(
+        "doc_id", "span_idx", "offset", mention_tokens("text").alias("toks")
+    )
+    hits = []
+    for r in spans.collect():
+        for i in range(len(r.toks)):
+            for n in range(1, min(max_n, len(r.toks) - i) + 1):
+                gram = " ".join(r.toks[i : i + n])
+                for t in by_alias.get(gram, []):
+                    hits.append((r.doc_id, r.span_idx, r.offset, gram, t))
+    if not distinct:
+        return sorted(hits)
+    best = {}
+    for d, si, off, a, t in hits:
+        k = (d, si, t)
+        o, al = best.get(k, (off, a))
+        best[k] = (min(o, off), min(al, a))
+    return sorted((d, si, o, a, t) for (d, si, t), (o, a) in best.items())
+
+
+def test_detect_mentions_equals_brute_force_matcher(spark, onto, small_world):
+    """The single broadcast first-token join finds exactly the
+    mentions of an exhaustive n-gram lookup, in both distinct modes,
+    on the fixture world and on punctuated text."""
     terms = spark.createDataFrame(onto.terms)
-    adict = alias_dictionary(terms)
-    a = detect_mentions(docs, adict, gate="case")
-    b = detect_mentions(docs, adict, gate="join")
-    ka = {tuple(r) for r in a.collect()}
-    kb = {tuple(r) for r in b.collect()}
-    assert ka == kb and len(ka) > 0
+    adict = alias_dictionary(terms).cache()
+    for docs in (
+        spark.createDataFrame(small_world["documents"]),
+        _punctuated_docs(spark),
+        _mini_docs(spark),
+    ):
+        for distinct in (False, True):
+            want = _reference_mentions(docs, adict, distinct)
+            got = sorted(
+                tuple(r)
+                for r in detect_mentions(docs, adict, distinct=distinct).collect()
+            )
+            assert want and got == want, distinct
 
 
-def test_gate_join_large_synthetic_dictionary(spark):
-    """10⁵-alias dictionary: the join gate runs without building any
-    driver-side literal, and finds the planted aliases."""
+def test_no_matchable_alias_returns_unionable_empty(spark, onto):
+    """An empty dictionary, or one whose aliases are all longer than
+    max_n, yields zero rows whose schema unions by name with a
+    non-empty result."""
+    docs = _mini_docs(spark)
+    full = alias_dictionary(spark.createDataFrame(onto.terms))
+    empty_dict = spark.createDataFrame([], "alias_norm string, term_id string")
+    long_dict = spark.createDataFrame(
+        [("t cell and b cell", "X:1"), ("b cell markers", "X:2")],
+        "alias_norm string, term_id string",
+    )
+    for distinct in (False, True):
+        hits = detect_mentions(docs, full, distinct=distinct)
+        n_hits = hits.count()
+        assert n_hits > 0
+        for empty in (
+            detect_mentions(docs, empty_dict, distinct=distinct),
+            detect_mentions(docs, long_dict, max_n=2, distinct=distinct),
+        ):
+            assert empty.count() == 0
+            assert empty.columns == hits.columns
+            assert hits.unionByName(empty).count() == n_hits
+            assert empty.unionByName(hits).count() == n_hits
+
+
+def test_large_synthetic_dictionary(spark):
+    """10⁵-alias dictionary: the planted aliases are found."""
     import pandas as pd
 
     n = 100_000
@@ -130,7 +196,7 @@ def test_gate_join_large_synthetic_dictionary(spark):
         ),
     ]
     docs = spark.createDataFrame(rows, DOCS_SCHEMA)
-    m = detect_mentions(docs, adict)  # auto → join above 10^4 tokens
+    m = detect_mentions(docs, adict)
     got = {r.term_id for r in m.collect()}
     assert got == {"T:000042", "T:099999"}
 
@@ -221,54 +287,10 @@ def test_punctuated_alias_matches_via_prepare_ontology(spark, onto):
     assert ("dx", tid, "t-cell alpha") in got
 
 
-def test_probe_hash_equals_probe_string(spark, onto, small_world):
-    """The hash-probe plan (xxhash64 over window columns + exact
-    verify on hits) must produce exactly the string-join mentions, for
-    both gates."""
-    docs = spark.createDataFrame(small_world["documents"])
-    terms = spark.createDataFrame(onto.terms)
-    adict = alias_dictionary(terms)
-    want = {
-        tuple(r)
-        for r in detect_mentions(docs, adict, probe="string").collect()
-    }
-    assert want
-    for g in ("case", "join"):
-        got = {
-            tuple(r)
-            for r in detect_mentions(
-                docs, adict, gate=g, probe="hash"
-            ).collect()
-        }
-        assert got == want, g
-
-
-def test_large_dict_no_driver_collect_parity(spark, onto, small_world):
-    """Forcing the over-threshold path (dict_collect_threshold=0) must
-    yield mentions identical to the collect path on the same
-    dictionary, for both probes."""
-    docs = spark.createDataFrame(small_world["documents"])
-    terms = spark.createDataFrame(onto.terms)
-    adict = alias_dictionary(terms)
-    want = {tuple(r) for r in detect_mentions(docs, adict).collect()}
-    assert want
-    for p in ("hash", "string"):
-        got = {
-            tuple(r)
-            for r in detect_mentions(
-                docs, adict, probe=p, dict_collect_threshold=0
-            ).collect()
-        }
-        assert got == want, p
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="driver-side literals"):
-        detect_mentions(docs, adict, gate="case", dict_collect_threshold=0)
-
-
 def test_million_alias_dictionary_smoke(spark):
-    """10⁶-row dictionary through the aggregation-only metadata path:
-    no driver collect of the dictionary, planted aliases found."""
+    """10⁶-row dictionary: max_n comes from a Spark aggregate, the
+    dictionary is never collected to the driver, and the planted
+    aliases are found."""
     from pyspark.sql import functions as F
 
     adict = spark.range(1_000_000).select(
@@ -291,6 +313,6 @@ def test_million_alias_dictionary_smoke(spark):
         ),
     ]
     docs = spark.createDataFrame(rows, DOCS_SCHEMA)
-    m = detect_mentions(docs, adict, dict_collect_threshold=500_000)
+    m = detect_mentions(docs, adict)
     got = {r.term_id for r in m.collect()}
     assert got == {"T:31337", "T:999999"}

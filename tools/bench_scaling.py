@@ -616,11 +616,11 @@ stage went from 79.7s (flat vs local[8]) to 28.8s. Fix shipped in
 `cello_spark/session.py`: `-Xms=-Xmx -XX:+AlwaysPreTouch`.
 
 **Lambda-free n-gram candidate builder.** Per-stage CPU attribution
-(`tools/profile_cpu.py`, jstack sampling in `tools/diag_stacks.py`,
-phase decomposition in `tools/diag_mentions.py`) showed the mention
+(`tools/profile_cpu.py`, jstack sampling and a per-phase
+decomposition of the mention stage) showed the mention
 stage burning 2.3x the core-seconds at local[32] vs local[8] for
 identical work, concentrated in the n-gram construction. Root cause
-(`tools/diag_ngram_variants.py`): nested higher-order functions
+(an A/B of n-gram builder variants): nested higher-order functions
 (transform → sequence → slice/array_join inside a lambda) evaluate
 INTERPRETED per element, and their per-position collection
 allocation anti-scales on a shared heap — while the flat gate
@@ -628,13 +628,13 @@ expression scales at the box envelope. The rewritten operator
 (posexplode → gate → explode(sequence) → top-level slice/array_join,
 one WholeStageCodegen span) costs ~3x less CPU at BOTH levels
 (33 vs 108 core-sec @8; 71 vs 166 @32 on the isolated phase). A GC
-A/B (`tools/diag_ngram_flags.py`) confirmed the allocation pathology
+A/B confirmed the allocation pathology
 was G1-specific (ParallelGC halved the inflated phase at 32 cores)
 but ParallelGC ran 24% SLOWER at local[8] on the full pipeline, so
 the plan-level fix was shipped instead of a GC swap that would
 flatter the pair by slowing its baseline.
 
-**Linking-stage byte diet + join shape** (`tools/diag_linked.py`):
+**Linking-stage byte diet + join shape:**
 the KG pipeline consumes only the selected labels from linking, so
 the n_labels-wide probs/bins arrays (~20x the label bytes) are no
 longer built, Arrow-transferred, or written
@@ -663,8 +663,8 @@ exact: candidate n-grams are built only for the token-lengths that
 actually occur among aliases starting with the gated token, not
 1..max.
 
-**Allocation-free, identity-skipping canonical rewrite**
-(`tools/diag_triples.py`): typing_triples wrapped final_labels in
+**Allocation-free, identity-skipping canonical rewrite:**
+typing_triples wrapped final_labels in
 array_distinct — an eval-mode expression that allocates a hash set
 PER ROW and anti-scales on the shared heap (8.4→30.0 core-sec 8→32
 vs 0.7→1.1 for the plain explode) — for a distinctness guarantee
@@ -677,8 +677,8 @@ fits, and skips per-row work entirely when the slice is empty (the
 no-merge common case). Stage totals: 29.9→2.1 core-sec at local[32]
 on the rewrite, 44.5→23.8 with the write.
 
-**Distinct-before-semi-join mention gate** (`tools/diag_triples.py`
-gate_raw/gate_distinct phases): the mention stage emits an OCCURRENCE
+**Distinct-before-semi-join mention gate** (gate_raw vs
+gate_distinct phases): the mention stage emits an OCCURRENCE
 table (one row per mention), so every gate that semi-joins on doc_id
 was exchanging and hash-building each occurrence row when only unique
 doc_ids matter. A partial-aggregate distinct collapses them map-side
@@ -688,8 +688,8 @@ end-to-end local[1] wall dropped 312→288s. At cluster scale this is
 the difference between shuffling the mention count (~15x the doc
 count on dense corpora) and shuffling the doc count.
 
-**DAG-parallel stage execution** (`BENCH/ab_overlap.json`,
-`tools/ab_overlap.py`): pipeline stages declare their inputs and run
+**DAG-parallel stage execution** (`BENCH/ab_overlap.json`):
+pipeline stages declare their inputs and run
 concurrently once deps are satisfied, each write job submitted from
 its own driver thread — Spark backfills one job's ramp/tail idle
 with the other's tasks. On dense corpora the gate plan makes mention
@@ -703,8 +703,7 @@ to fill — mild scheduler/cache contention between the two jobs) vs
 where task-slot idle exists, which is also the real-cluster case
 (an executor fleet is rarely saturated by one stage's tail). The
 resume/manifest contract is unchanged — stages still commit
-atomically and independently (CELLO_STAGE_OVERLAP=0 forces the
-sequential schedule).
+atomically and independently.
 
 ## Measurement fix: warm the parquet-writer path before timing
 

@@ -7,6 +7,7 @@ Usage: python tools/check_entry.py [sf_dir] [only_query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -14,7 +15,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E  # noqa: E402
 from cello_spark.session import get_spark  # noqa: E402
@@ -63,7 +64,7 @@ def main() -> int:
     write_json = "--json" in sys.argv
     sf_dir = argv[0] if len(argv) > 0 else "/root/testdata/sf0.01"
     only = set(argv[1:])
-    spark = get_spark(app_name="check_entry", cores=8)
+    spark = get_spark(app_name="check_entry")  # cores: $SPARK_GRAFT_CPUS
     con = duckdb.connect()
     for t in TABLES:
         con.sql(
