@@ -7,9 +7,12 @@ Stages (SURVEY §7.1):
   3. onto_triples   — (child, rel, parent) schema-layer triples
   4. mentions       — dictionary mention detection over document spans
   5. linked         — score/reconcile/binarize/most-specific (one
-                      mapInPandas pass)
+                      mapInPandas pass) over EVERY document; it does
+                      not wait on mentions, so stages 4 and 5 run
+                      concurrently
   6. canonical_map  — alias/xref connected components → canonical ids
-  7. triples        — ontology ∪ typing triples, subjects/objects
+  7. triples        — ontology ∪ typing triples of the mentioned
+                      documents (the mention gate), subjects/objects
                       rewritten to canonical ids
 
 Scale split (SURVEY §7.4): the ontology side is ≤ ~10^4 terms — a
@@ -44,15 +47,6 @@ from cello_spark.sources.fixtures import Ontology, term_id, QUALIFIER_SUFFIXES
 from cello_spark.sources.ontology import INVERTIBLE_RELS
 
 TERM_PREFIX = "CS:"
-
-# mentioned-doc fraction above which the linked stage scores ALL
-# features (zero-exchange scan into the scorer, narrow post-join)
-# instead of pre-gating the wide features through a shuffle — see
-# stage_linked. Measured breakeven is high: the exchange the dense
-# plan saves is cheap relative to the extra scoring below ~0.9.
-# A threshold <= 0 forces the dense plan and > 1 the sparse plan
-# without running the probe.
-GATE_SELECTIVITY = 0.9
 
 
 # ---------------------------------------------------------------------------
@@ -168,8 +162,7 @@ def prepare_ontology(
 def _ensure_parallelism(df: DataFrame, spark: SparkSession, key: str = "doc_id") -> DataFrame:
     """Small/under-split sources (a handful of tiny parquet files get
     coalesced into ~1 scan partition by maxPartitionBytes) would make
-    the whole document side serial — spread them keyed by doc_id, which
-    also co-partitions the later features ⋈ mentions semi-join. No-op
+    the whole document side serial — spread them keyed by doc_id. No-op
     on a real 100 TB table (file splits already provide parallelism)."""
     from cello_spark.partitioning import ensure_min_partitions
 
@@ -274,9 +267,9 @@ def build_kg_pipeline(
         #
         # distinct=False: this artifact is an OCCURRENCE table (one row
         # per dictionary match), not a per-(span, term) distinct set.
-        # Every pipeline consumer is dedup-agnostic — the linked
-        # stage's gate is a doc_id semi join (hash build dedups
-        # natively) and the typing triples derive from linked labels —
+        # Every pipeline consumer is dedup-agnostic — the triples
+        # stage's gate is a distinct doc_id semi join and the typing
+        # triples derive from linked labels —
         # while the (doc, span, term) dedup costs the stage's single
         # exchange: +27 JVM core-sec at local[8], +70 at local[32] on
         # 1M docs (it shuffles every mention and anti-scales, measured
@@ -288,89 +281,67 @@ def build_kg_pipeline(
         )
 
     # mention gate: only docs that mention at least one ontology term
-    # contribute typing triples. TWO plans, chosen by sampled density:
+    # contribute typing triples. The linked stage scores EVERY
+    # document: the features scan feeds mapInPandas with no exchange
+    # and no dependency on the mentions stage, so mention detection
+    # (documents input) and scoring (features input) run concurrently,
+    # packing each other's ramp/tail/straggler idle. The gate is a
+    # semi-join in the triples stage, on the NARROW linked rows
+    # (doc_id + labels, ~5x smaller than the feature vectors). Labels
+    # do not depend on which rows share a scoring batch, so scoring
+    # unmentioned docs cannot change a mentioned doc's labels.
     #
-    #   sparse (mentioned fraction < GATE_SELECTIVITY): the linked
-    #     stage semi-joins the WIDE features against mentioned doc_ids
-    #     BEFORE scoring — the exchange of the surviving features is
-    #     paid to skip scoring the unmentioned majority. SHUFFLE_HASH
-    #     on the mention side (sort-merge would sort the wide features
-    #     side for a join that only needs a doc_id hash set — measured
-    #     2x the join cost at both levels); the hash side spills if
-    #     oversized, so this stays safe at 10^12 docs. linked depends
-    #     on mentions and the stages serialize.
+    # Pre-gating the wide features before scoring instead (linked
+    # waiting on mentions, an exchange of the surviving features) has
+    # no recorded win on 4 cores: with 10% of docs mentioned it was no
+    # faster in forced A/Bs at 40k and 160k docs (CHANGES.md), and
+    # choosing between the two plans cost a sampling probe of 9 Spark
+    # jobs per build.
     #
-    #   dense (most docs mentioned — this bench, and any corpus
-    #     pre-filtered upstream): score EVERYTHING — the features scan
-    #     feeds mapInPandas with ZERO exchange and ZERO dependency on
-    #     the mentions stage, so mention detection (documents input)
-    #     and scoring (features input) run CONCURRENTLY, packing each
-    #     other's ramp/tail/straggler idle; the gate semi-join moves to
-    #     the triples stage, on the NARROW linked rows (doc_id +
-    #     labels, ~5x smaller than the feature vectors).
-    #
-    # The density probe samples a few thousand documents at build time
-    # (same stats role as a CBO's ANALYZE sample; limit() keeps it one
-    # sub-second job). A forced threshold (<=0 dense, >1 sparse) skips
-    # the probe entirely.
-    #
-    # No dropDuplicates on the mention side in either plan — the
-    # left_semi hash build dedups natively, and the explicit dedup
-    # costs a full extra aggregate exchange (measured 15s vs 2s on
-    # 8.5M mentions at local[32]).
-    #
-    # Broadcasting the mention side instead (zero exchange on both
-    # sides) was measured and REJECTED at corpus scale: collecting
-    # and hash-building 4.5M doc_ids on the driver is ~15-20s of
-    # serial time — the full stage ran 25.6s vs 10.5s at local[32]
-    # (32.6 vs 15.6 at local[8]) despite lower aggregate JVM CPU.
-    # Broadcast gates only pay when the mentioned set is dict-sized
-    # (the streaming micro-batch path, where it IS used).
-    if GATE_SELECTIVITY <= 0.0:
-        dense = True
-    elif GATE_SELECTIVITY > 1.0:
-        dense = False
-    else:
-        dense = (
-            estimate_mention_density(
-                documents, spark.createDataFrame(prep["alias_dict"])
-            )
-            >= GATE_SELECTIVITY
-        )
+    # Broadcasting the mention side instead of SHUFFLE_HASH was
+    # measured and REJECTED at corpus scale: collecting and
+    # hash-building 4.5M doc_ids on the driver is ~15-20s of serial
+    # time — the full stage ran 25.6s vs 10.5s at local[32] (32.6 vs
+    # 15.6 at local[8]) despite lower aggregate JVM CPU. Broadcast
+    # gates only pay when the mentioned set is dict-sized (the
+    # streaming micro-batch path, where it IS used). The shuffled hash
+    # side spills if oversized, so the gate stays safe at 10^12 docs.
 
     def stage_linked(ctx: dict) -> DataFrame:
         # triple emission consumes only the selected labels; the
         # probs/bins arrays are ~20x the bytes and re-derivable —
         # emit_scores=False skips their Arrow transfer and parquet
         # write entirely
-        if dense:
-            # right-size the UDF input: each mapInPandas task costs
-            # ~150ms of fixed Python overhead (task setup, broadcast
-            # unpickle, Arrow stream open/close — measured), so many
-            # small scan partitions double the stage's Python CPU.
-            # Shuffle-free coalesce into core-aligned waves: up to 3
-            # waves of tasks (fewer tasks → less fixed py overhead —
-            # measured 12% on the stage at local[8] vs batch-count-
-            # derived task counts), floored at 2x cores so parallelism
-            # never starves, capped by the ≥4-Arrow-batch task size
-            # when the input is small. (The sparse plan needs none of
-            # this: its exchange already re-sizes to 2x-cores shuffle
-            # partitions. At 100 TB the scan splits hold >>4 batches
-            # each and this is a no-op.)
-            from cello_spark.session import ARROW_MAX_RECORDS
+        #
+        # right-size the UDF input: each mapInPandas task costs
+        # ~150ms of fixed Python overhead (task setup, broadcast
+        # unpickle, Arrow stream open/close — measured), so many
+        # small scan partitions double the stage's Python CPU.
+        # Shuffle-free coalesce into core-aligned waves: up to 3
+        # waves of tasks (fewer tasks → less fixed py overhead —
+        # measured 12% on the stage at local[8] vs batch-count-
+        # derived task counts), floored at 2x cores so parallelism
+        # never starves, capped by the ≥4-Arrow-batch task size
+        # when the input is small. At 100 TB the scan splits hold
+        # >>4 batches each and this is a no-op.
+        from cello_spark.session import ARROW_MAX_RECORDS
 
-            # count the RAW scan, not the repartition-wrapped plan —
-            # counting `features` would execute the round-robin
-            # exchange _ensure_parallelism added, a full extra shuffle
-            # of every feature row inside the timed stage
-            n_docs = raw_features.count()
-            par = spark.sparkContext.defaultParallelism
-            max_parts = int(n_docs // (4 * ARROW_MAX_RECORDS)) or 1
-            target = max(2 * par, min(3 * par, max_parts))
-            feats_in = features
-            if features.rdd.getNumPartitions() > target:
-                feats_in = features.coalesce(target)
-            return link_documents(feats_in, model, emit_scores=False)
+        # count the RAW scan, not the repartition-wrapped plan —
+        # counting `features` would execute the round-robin
+        # exchange _ensure_parallelism added, a full extra shuffle
+        # of every feature row inside the timed stage
+        n_docs = raw_features.count()
+        par = spark.sparkContext.defaultParallelism
+        max_parts = int(n_docs // (4 * ARROW_MAX_RECORDS)) or 1
+        target = max(2 * par, min(3 * par, max_parts))
+        feats_in = features
+        if features.rdd.getNumPartitions() > target:
+            feats_in = features.coalesce(target)
+        return link_documents(feats_in, model, emit_scores=False)
+
+    merged_terms = merged_term_set(prep["canonical_map"], term_prefix=term_prefix)
+
+    def stage_triples(ctx: dict) -> DataFrame:
         # distinct BEFORE the semi join: the occurrence table carries
         # many rows per doc (one per mention), and SHUFFLE_HASH would
         # otherwise exchange + hash-build every occurrence row. The
@@ -381,26 +352,7 @@ def build_kg_pipeline(
         mentioned = (
             ctx["mentions"].select("doc_id").distinct().hint("SHUFFLE_HASH")
         )
-        gated = features.join(mentioned, "doc_id", "left_semi")
-        return link_documents(gated, model, emit_scores=False)
-
-    merged_terms = merged_term_set(prep["canonical_map"], term_prefix=term_prefix)
-
-    def stage_triples(ctx: dict) -> DataFrame:
-        linked = ctx["linked"]
-        if dense:
-            # the mention gate, applied to the NARROW linked rows (the
-            # dense linked stage scored every doc so it could run
-            # concurrently with mention detection)
-            # distinct-first for the same reason as the sparse gate in
-            # stage_linked: exchange unique doc_ids, not occurrences
-            mentioned = (
-                ctx["mentions"]
-                .select("doc_id")
-                .distinct()
-                .hint("SHUFFLE_HASH")
-            )
-            linked = linked.join(mentioned, "doc_id", "left_semi")
+        linked = ctx["linked"].join(mentioned, "doc_id", "left_semi")
         raw = ctx["onto_triples"].unionByName(typing_triples(linked))
         return canonical_rewrite_triples(
             raw, ctx["canonical_map"], merged_terms, term_prefix=term_prefix
@@ -420,13 +372,12 @@ def build_kg_pipeline(
         .add_stage("closure", stage_closure, tiny=True, deps=[])
         .add_stage("onto_triples", stage_onto_triples, tiny=True, deps=[])
         .add_stage("mentions", stage_mentions, deps=[])
-        .add_stage("linked", stage_linked, deps=[] if dense else ["mentions"])
+        .add_stage("linked", stage_linked, deps=[])
         .add_stage("canonical_map", stage_canonical_map, tiny=True, deps=[])
         .add_stage(
             "triples",
             stage_triples,
-            deps=["onto_triples", "linked", "canonical_map"]
-            + (["mentions"] if dense else []),
+            deps=["onto_triples", "linked", "canonical_map", "mentions"],
         )
     )
     if include_media_triples:
@@ -438,11 +389,9 @@ def estimate_mention_density(
     documents: DataFrame, alias_df: DataFrame, sample_docs: int = 4096
 ) -> float:
     """Fraction of documents with ≥1 dictionary mention, estimated on a
-    limit() sample — the table-stats probe behind the gate-plan choice
-    (a CBO would read the same number from ANALYZE statistics).
-    limit() is the cheapest sample (first partitions only); its bias is
-    acceptable for a one-bit plan decision with a conservative 0.9
-    threshold."""
+    limit() sample (first partitions only, so biased toward them) — a
+    corpus statistic for diagnostics and traces. build_kg_pipeline does
+    not call it: its plan is the same at every density."""
     sample = documents.select("doc_id", "spans").limit(sample_docs)
     n = sample.count()
     if n == 0:

@@ -24,6 +24,8 @@ are never mutated — mentions are an additive side table keyed by
 
 from __future__ import annotations
 
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -51,23 +53,32 @@ def _dir_has_data_files(spark: SparkSession, path: str) -> bool:
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return False
-    root = fs.getFileStatus(jpath).getPath().toString().rstrip("/")
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        f = it.next()
-        if f.getLen() == 0:
-            continue
-        rel = f.getPath().toString()[len(root) :].lstrip("/")
-        segs = rel.split("/")
-        name_ok = not segs[-1].startswith(("_", "."))
-        dirs_ok = all(
-            "=" in seg and not seg.startswith(("_", "."))
-            for seg in segs[:-1]
-        )
-        if name_ok and dirs_ok:
-            return True
+    # no exists() pre-check: the directory can vanish between any two
+    # calls, so a missing path is taken from the listing's own
+    # FileNotFoundException, wherever it surfaces
+    try:
+        root = fs.getFileStatus(jpath).getPath().toString().rstrip("/")
+        it = fs.listFiles(jpath, True)
+        while it.hasNext():
+            f = it.next()
+            if f.getLen() == 0:
+                continue
+            rel = f.getPath().toString()[len(root) :].lstrip("/")
+            segs = rel.split("/")
+            name_ok = not segs[-1].startswith(("_", "."))
+            dirs_ok = all(
+                "=" in seg and not seg.startswith(("_", "."))
+                for seg in segs[:-1]
+            )
+            if name_ok and dirs_ok:
+                return True
+    except Py4JJavaError as e:
+        if not is_instance_of(
+            spark.sparkContext._gateway,
+            e.java_exception,
+            "java.io.FileNotFoundException",
+        ):
+            raise
     return False
 
 
@@ -293,15 +304,17 @@ def run_incremental_kg(
         alias_df = sess.createDataFrame(alias_pdf)
         cm_df = sess.createDataFrame(cm_pdf)
         mentions = detect_mentions(batch_docs, alias_df, distinct=False)
-        # micro-batches are small relative to the corpus → always the
-        # sparse gate: semi-join the wide features down to this batch's
-        # mentioned docs before scoring (see plans/kg.py stage_linked).
+        # micro-batches are small relative to the corpus, so gate
+        # BEFORE scoring: semi-join the wide feature table down to this
+        # batch's mentioned docs (the batch pipeline instead scores
+        # every doc and gates the linked rows — there the features are
+        # the batch's own input, here they are the whole corpus).
         # BROADCAST, not SHUFFLE_HASH: a micro-batch's mentioned set is
         # bounded by max_files_per_trigger (dict-sized), so the
         # broadcast build is cheap and the wide feature table is
         # neither shuffled nor sorted (the batch pipeline's gate keeps
         # SHUFFLE_HASH because its mentioned set is corpus-sized —
-        # see the measured rejection in plans/kg.py stage_linked)
+        # see the measured rejection in plans/kg.py)
         # distinct shrinks the broadcast build to one entry per doc
         # (the occurrence table has one row per mention)
         mentioned = F.broadcast(mentions.select("doc_id").distinct())

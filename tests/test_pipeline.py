@@ -4,6 +4,8 @@ invariant, stage-granular resume, lineage metrics."""
 import json
 import os
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -308,35 +310,108 @@ def test_canonical_rewrite_dedups_only_where_merges_collide(spark):
     assert "Deduplicate" not in plan_str
 
 
-def test_gate_plans_produce_identical_triples(
-    spark, tmp_path, onto, small_world, monkeypatch
-):
-    """The adaptive mention gate picks between pre-gating the wide
-    features (sparse corpora) and scoring everything + narrow post-join
-    (dense corpora). Both plans must emit the identical triple set."""
-    from cello_spark.plans import kg as kgmod
+# words that share no token with the fixture alias dictionary
+_FILLER = (
+    "sample observed measured assay profile donor patient control "
+    "experiment study figure result batch replicate tissue series"
+).split()
 
+
+def _blank_text_spans(documents, doc_ids, rng):
+    """`documents` with every text span of the `doc_ids` documents
+    replaced by as many filler words as it had tokens, offsets
+    recomputed; other documents unchanged."""
+    rows = []
+    for row in documents.itertuples(index=False):
+        if row.doc_id not in doc_ids:
+            rows.append({"doc_id": row.doc_id, "spans": row.spans})
+            continue
+        spans, offset = [], 0
+        for sp in row.spans:
+            sp = dict(sp, offset=offset)
+            if sp["kind"] == "text":
+                sp["text"] = " ".join(rng.choice(_FILLER, len(sp["text"].split())))
+                offset += len(sp["text"]) + 1
+            else:
+                offset += 1
+            spans.append(sp)
+        rows.append({"doc_id": row.doc_id, "spans": spans})
+    return pd.DataFrame(rows)
+
+
+def test_sparse_corpus_types_only_mentioned_documents(
+    spark, tmp_path, onto, small_world, label_edges
+):
+    """The mention gate on a corpus where most documents mention no
+    term: the output is the ontology triples plus the golden typing
+    triples of the still-mentioned documents, and nothing for the
+    rest, although the linked stage scores every document."""
+    from cello_spark.plans.kg import estimate_mention_density, prepare_ontology
+
+    alias_dict = prepare_ontology(onto)["alias_dict"]
+    alias_tokens = {tok for a in alias_dict.alias_norm for tok in a.split()}
+    assert not alias_tokens & set(_FILLER)
+    rng = np.random.default_rng(7)
+    all_ids = list(small_world["documents"].doc_id)
+    blanked = set(rng.choice(all_ids, size=3 * len(all_ids) // 4, replace=False))
+    docs = spark.createDataFrame(
+        _blank_text_spans(small_world["documents"], blanked, rng)
+    )
+    # the density helper, sampling every document, sees the same split
+    density = estimate_mention_density(
+        docs, spark.createDataFrame(alias_dict), sample_docs=len(all_ids)
+    )
+    assert density == (len(all_ids) - len(blanked)) / len(all_ids)
+
+    p = build_kg_pipeline(
+        spark,
+        str(tmp_path / "sparse"),
+        docs,
+        spark.createDataFrame(small_world["features"]),
+        onto,
+        small_world["weights"],
+        small_world["thresholds"],
+    )
+    p.run()
+    got = {tuple(r) for r in p.output("triples").collect()}
+
+    golden = _golden_triples(onto, small_world, label_edges)
+    typing = golden.subj.isin(all_ids)
+    want = golden[~typing | ~golden.subj.isin(blanked)]
+    assert got == set(want.itertuples(index=False, name=None))
+    # the gate dropped typed documents, and kept some
+    assert golden[typing].subj.isin(blanked).any()
+    assert (typing & ~golden.subj.isin(blanked)).any()
+
+
+def test_build_launches_no_spark_job(spark, tmp_path, onto, small_world):
+    """Building the pipeline runs nothing: no density probe or other
+    job before run(). The linked stage does not wait on mentions (the
+    two run concurrently); the triples stage applies the gate."""
     docs = spark.createDataFrame(small_world["documents"])
     feats = spark.createDataFrame(small_world["features"])
-
-    def run_with(threshold: float, tag: str):
-        monkeypatch.setattr(kgmod, "GATE_SELECTIVITY", threshold)
+    sc = spark.sparkContext
+    group = "test_build_launches_no_spark_job"
+    sc.setJobGroup(group, "build_kg_pipeline")
+    try:
         p = build_kg_pipeline(
             spark,
-            str(tmp_path / tag),
+            str(tmp_path / "build"),
             docs,
             feats,
             onto,
             small_world["weights"],
             small_world["thresholds"],
         )
-        p.run()
-        return sorted(tuple(r) for r in p.output("triples").collect())
-
-    dense = run_with(0.0, "dense")    # always score-all + narrow join
-    sparse = run_with(1.1, "sparse")  # always pre-gate wide features
-    assert dense == sparse
-    assert len(dense) > 0
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        docs.count()  # the group does record this thread's jobs
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) > 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    deps = {name: d for name, _fn, _tiny, d in p.stages}
+    assert deps["linked"] == []
+    assert "mentions" in deps["triples"]
 
 
 def test_triples_identical_across_parallelism(spark, tmp_path, onto, small_world):

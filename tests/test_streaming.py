@@ -2,6 +2,7 @@
 restarts, batch-operator parity, span-sequence invariant."""
 
 import os
+import shutil
 
 import pytest
 
@@ -412,6 +413,11 @@ def test_dir_has_data_files_semantics(spark, tmp_path):
     with open(os.path.join(d, "part-2.parquet"), "w") as f:
         f.write("x")
     assert _dir_has_data_files(spark, d)
+    # a directory deleted after it held data, and a path under it,
+    # read as missing (no exists() pre-check to race with the listing)
+    shutil.rmtree(d)
+    assert not _dir_has_data_files(spark, d)
+    assert not _dir_has_data_files(spark, os.path.join(d, "lang=en"))
 
 
 def test_dir_has_data_files_ignores_metadata_subdirs(spark, tmp_path):
